@@ -43,6 +43,7 @@ classic iterative-MLlib pitfall (SURVEY §4 caching note).
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -132,7 +133,14 @@ def adaptive_blob_partitions(spark, n: int, current: int) -> int | None:
                 str(_BLOB_ROWS_PER_PARTITION_DEFAULT),
             )
         )
-    except Exception:  # pragma: no cover - conf unavailable
+    except Exception as exc:
+        warnings.warn(
+            f"{_BLOB_ROWS_PER_PARTITION_CONF} unreadable ({exc!r}); sizing "
+            f"blob partitions at the default {_BLOB_ROWS_PER_PARTITION_DEFAULT}"
+            " rows per partition",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         rows_target = _BLOB_ROWS_PER_PARTITION_DEFAULT
     if rows_target <= 0 or n <= 0:
         return None

@@ -26,6 +26,7 @@ Design decisions for 100 TB scale:
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -156,7 +157,13 @@ def _spread_width(rows: DataFrame) -> int | None:
                 _SPREAD_BYTES_CONF, str(_SPREAD_BYTES_DEFAULT)
             )
         )
-    except Exception:  # pragma: no cover - conf unavailable
+    except Exception as exc:
+        warnings.warn(
+            f"{_SPREAD_BYTES_CONF} unreadable ({exc!r}); spreading with the "
+            f"default {_SPREAD_BYTES_DEFAULT} bytes per partition",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         spread_bytes = _SPREAD_BYTES_DEFAULT
     if spread_bytes <= 0:
         return cores
@@ -164,7 +171,13 @@ def _spread_width(rows: DataFrame) -> int | None:
         est = int(
             rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:  # pragma: no cover - JVM estimate unavailable
+    except Exception as exc:
+        warnings.warn(
+            f"optimizer size estimate unavailable ({exc!r}); spreading "
+            f"full-width to {cores} partitions",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return cores
     return min(cores, max(2, -(-est // spread_bytes)))
 

@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 32g.  A fixed 32g heap lets the
+    JVM grow past what a small box holds (the local-mode driver JVM runs
+    every executor task too), and the kernel kills it instead of the GC
+    running; half leaves room for the off-heap Arrow buffers and the
+    Python workers."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "32g"
+    return f"{min(32 * 1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "entropy_balance_weighting_spark",
     master: str | None = None,
@@ -52,7 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

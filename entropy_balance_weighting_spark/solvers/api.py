@@ -58,6 +58,32 @@ _KNOWN_OPTIONS = {
 }
 
 
+_LOCAL_RELATION_CONF = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+def _executor_side_frame(spark, pdf):
+    """``spark.createDataFrame(pdf)`` as an executor-side (RDD-backed)
+    relation.
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) PySpark turns the Arrow payload into a driver-side
+    ``LocalRelation``, and every action on it re-converts the whole
+    payload on the driver: on 4 cores a 600k-row weights frame took
+    ~2 s to create and render that way, against ~0.3 s as an RDD the
+    executors convert in parallel.  The threshold is overridden for this one call only; the
+    caller's value (or the default) is restored afterwards."""
+    conf = spark.conf
+    prev = conf.get(_LOCAL_RELATION_CONF, None)  # None: never set
+    conf.set(_LOCAL_RELATION_CONF, "0")
+    try:
+        return spark.createDataFrame(pdf)
+    finally:
+        if prev is None:
+            conf.unset(_LOCAL_RELATION_CONF)
+        else:
+            conf.set(_LOCAL_RELATION_CONF, prev)
+
+
 def _validate_options(options: dict | None) -> dict:
     """Unlike the reference (which silently ignores unknown keys), reject
     typos loudly — but accept the reference's documented/vestigial names."""
@@ -289,14 +315,15 @@ def _sparse_to_problem_tables(sp, weights0):
     rows, cols, vals = _csx_coo(data, indices, indptr, shape, fmt)
     import pandas as pd
 
-    x_long = spark.createDataFrame(
+    x_long = _executor_side_frame(
+        spark,
         pd.DataFrame(
             {"row_id": rows, "moment_id": cols.astype(np.int32), "value": vals}
-        )
+        ),
     )
     w0 = np.asarray(weights0, dtype=np.float64)
-    w0_df = spark.createDataFrame(
-        pd.DataFrame({"row_id": np.arange(n, dtype=np.int64), "w0": w0})
+    w0_df = _executor_side_frame(
+        spark, pd.DataFrame({"row_id": np.arange(n, dtype=np.int64), "w0": w0})
     )
     names = [f"m{j}" for j in range(k)]
     moments = spark.createDataFrame(
@@ -542,14 +569,42 @@ class _LocalKernelAsDataFrame:
         pdf = pd.DataFrame(
             {"row_id": np.asarray(self._row_ids, dtype=np.int64), "new_weight": w}
         )
-        return self._spark.createDataFrame(pdf)
+        return _executor_side_frame(self._spark, pdf)
 
 
 def _collect_dense(pt: ProblemTables):
-    """Local fast path: collect the long tables into a dense numpy problem
+    """Local fast path: collect the problem into a dense numpy problem
     (SURVEY §7.2 — exactness for small fixtures, no per-iteration jobs).
-    Arrow-batched ``toPandas`` + vectorized scatter — no per-row Python.
-    The two collects run as concurrent jobs (guide §2.6): they share the
+
+    With builder-packed arrays this is ONE ``toArrow()`` of the per-row CSR
+    columns ``(row_id, w0, idx, val)``: the row lengths come from the list
+    offsets and the flattened ``idx``/``val`` buffers scatter straight into
+    the dense matrix — no long table, no row_id lookup.  Tables without
+    packed arrays (sparse-derived, bundle-loaded, null-category and
+    huge-combo specs) collect the long tables instead."""
+    if pt.packed_arrays is None:
+        return _collect_dense_long(pt)
+    import pyarrow.compute as pc
+
+    tbl = pt.packed_arrays.select("row_id", "w0", "idx", "val").toArrow()
+    row_ids = tbl.column("row_id").to_numpy()
+    w0 = tbl.column("w0").to_numpy()
+    n = len(row_ids)
+    lengths = pc.fill_null(pc.list_value_length(tbl.column("idx")), 0)
+    rows = np.repeat(np.arange(n), lengths.to_numpy())
+    x = np.zeros((n, pt.k))
+    # null list entries (dropna=False numerics) arrive as NaN, as they do
+    # through the long collect, so validation sees the same cells
+    x[rows, pc.list_flatten(tbl.column("idx")).to_numpy()] = pc.list_flatten(
+        tbl.column("val")
+    ).to_numpy()
+    return x, w0, row_ids, pt.w0.sparkSession
+
+
+def _collect_dense_long(pt: ProblemTables):
+    """Long-table fallback of :func:`_collect_dense`: Arrow-batched
+    ``toPandas`` + vectorized scatter — no per-row Python.  The two
+    collects run as concurrent jobs (guide §2.6): they share the
     materialized prep rows, so overlapping them makes the wall the max of
     the two instead of the sum."""
     from concurrent.futures import ThreadPoolExecutor

@@ -145,3 +145,20 @@ def test_adaptive_blob_partitions(spark):
         assert adaptive_blob_partitions(spark, 600_000, 32) is None
     finally:
         spark.conf.unset("spark.ebw.blobRowsPerPartition")
+
+
+def test_adaptive_blob_partitions_bad_conf_warns(spark):
+    """An unreadable rows-per-partition conf falls back to the default,
+    and says so."""
+    import pytest
+
+    from entropy_balance_weighting_spark.kernels.spark import (
+        adaptive_blob_partitions,
+    )
+
+    spark.conf.set("spark.ebw.blobRowsPerPartition", "lots")
+    try:
+        with pytest.warns(RuntimeWarning, match="default 150000 rows"):
+            assert adaptive_blob_partitions(spark, 600_000, 32) == 4
+    finally:
+        spark.conf.unset("spark.ebw.blobRowsPerPartition")

@@ -230,3 +230,33 @@ def test_spread_width_is_size_derived_and_self_disabling(spark):
         assert _spread_width(small) == cores
     finally:
         spark.conf.unset(_SPREAD_BYTES_CONF)
+
+
+def test_spread_width_fallbacks_warn(spark):
+    """Both fallbacks of _spread_width name the plan they switch to: an
+    unreadable conf spreads at the default bytes per partition, and a
+    missing optimizer estimate spreads full-width."""
+    from entropy_balance_weighting_spark.plans.moment_spec import (
+        _SPREAD_BYTES_CONF,
+        _spread_width,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    small = spark.range(0, 10, 1, 1).selectExpr("id", "cast(id as double) w0")
+    spark.conf.set(_SPREAD_BYTES_CONF, "not-a-number")
+    try:
+        with pytest.warns(RuntimeWarning, match="default 2097152 bytes"):
+            assert _spread_width(small) == 2
+    finally:
+        spark.conf.unset(_SPREAD_BYTES_CONF)
+
+    class NoEstimate:
+        sparkSession = small.sparkSession
+        rdd = small.rdd
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("no estimate")
+
+    with pytest.warns(RuntimeWarning, match=f"full-width to {cores} partitions"):
+        assert _spread_width(NoEstimate()) == cores
