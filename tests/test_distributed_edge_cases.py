@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from entropy_balance_weighting_spark import entropy_balance
+from entropy_balance_weighting_spark import entropy_balance, entropy_balance_penalty
 from entropy_balance_weighting_spark.plans import MomentSpec, build_problem_tables
 from entropy_balance_weighting_spark.plans.moment_spec import targets_from_problem
 
@@ -137,9 +137,9 @@ def test_distributed_validation_rejects_bad_inputs(spark):
 
 def test_deferred_validation_same_error_all_distributed_kernels(spark):
     """V1 validation is fused into the kernels' first pass (r13
-    optimization): the unbounded and elastic distributed kernels must
-    still raise the SAME bad-entry ValueError — with the counts — that
-    the eager aggregate produced, for bad X values and bad weights."""
+    optimization): the unbounded, elastic and penalty distributed kernels
+    must still raise the SAME bad-entry ValueError — with the counts —
+    that the eager aggregate produced, for bad X values and bad weights."""
     pdf = pd.DataFrame(
         {
             "rid": np.arange(12),
@@ -154,14 +154,19 @@ def test_deferred_validation_same_error_all_distributed_kernels(spark):
         drop_nonpositive_weights=False,  # let both reach the validator
     )
     pt = build_problem_tables(spark.createDataFrame(pdf), spec)
-    for opts in (
-        {"force_distributed": True},
-        {"force_distributed": True, "bounds": (0.2, 5.0)},
+    for solve, opts in (
+        (entropy_balance, {"force_distributed": True}),
+        (entropy_balance, {"force_distributed": True, "bounds": (0.2, 5.0)}),
+        (entropy_balance_penalty, {"force_distributed": True}),
+        (
+            entropy_balance_penalty,
+            {"force_distributed": True, "bounds": (0.2, 5.0)},
+        ),
     ):
         with pytest.raises(
             ValueError, match=r"1 bad X rows, 1 bad weights"
         ):
-            entropy_balance(
+            solve(
                 mean_population_moments=np.array([0.5]),
                 x_sample=pt,
                 options=opts,
