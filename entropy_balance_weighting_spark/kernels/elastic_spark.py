@@ -1,6 +1,5 @@
 """Distributed kernel for the elastic interior-point solver — split-state
-Arrow batches over an RDD ``zip`` (round-7 design, adjudicated by
-``spikes/zip_state_spike.py``).
+Arrow batches over an RDD ``zip`` (round-7 design).
 
 The elastic loop is the only kernel that mutates per-row state every
 iteration.  The previous packed-DataFrame design committed by rewriting the
@@ -20,15 +19,18 @@ Data plane:
     DERIVED, see STATE_NAMES — vs ~150 B/row for full packed rows at
     K=8; the gap widens with K).  Re-cached per commit; lm_hi is inert
     (0) without an upper bound.
-  - **passes** — ``base.zip(state).mapPartitions(pass_fn)`` where the
-    pair batches are reassembled ZERO-COPY (same buffers, one combined
-    RecordBatch) and fed to the same ``_estats``/``_estep`` math as
-    before; K/K²-sized partials only; commits stay lazy (zero jobs) and
-    materialize inside the next stats scan — 2 jobs per iteration, the
-    same discipline the job-count pin (tests/test_elastic.py) enforces.
+  - **passes** — one ``mapPartitions`` over the zipped base and state,
+    where the pair batches are reassembled ZERO-COPY (same buffers, one
+    combined RecordBatch) and fed to the ``_estats``/``_estep`` math;
+    K/K²-sized partials only.  Both caches, the zip, the reduce and the
+    commit lifecycle live in a split-state
+    :class:`~entropy_balance_weighting_spark.kernels.blobstore.BlobStore`.
+    Commits stay lazy (zero jobs) and materialize inside the next stats
+    scan — 2 jobs per iteration, the same discipline the job-count pin
+    (tests/test_elastic.py) enforces.
   - **fused commit+stats (r9)** — a pending commit is applied BY the
     next stats scan itself (``_ecommit_stats_pass``): one pass over
-    ``base.zip(old_state)`` yields the new state cache elements (with
+    the zipped base and old state yields the new state cache elements (with
     the partition stats payload piggybacked on each partition's last
     element) while accumulating the stats on the just-committed state —
     the base cache crosses the JVM/Python boundary once per iteration's
@@ -45,15 +47,15 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
-from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from entropy_balance_weighting_spark.kernels.base import EStats, EStepStats
-from entropy_balance_weighting_spark.kernels.penalty_spark import _ftb_batch
+from entropy_balance_weighting_spark.kernels.blobstore import BlobStore
+from entropy_balance_weighting_spark.kernels.penalty_spark import (
+    _ftb_batch,
+    _moment_totals_pass,
+)
 from entropy_balance_weighting_spark.kernels.spark import (
-    _post_cleanup_gc,
     _flatten_rb,
     _pack_rb,
     _rb_col,
@@ -63,12 +65,11 @@ from entropy_balance_weighting_spark.kernels.spark import (
     gram_bytes,
     reduce_big,
     gram_from_sums,
+    ipc_ser,
     make_gram_accum,
-    maybe_elide_idx,
     pack_rows,
 )
 
-BASE_NAMES = ["row_id", "w0", "idx", "val"]
 # r9 narrow state: the bound slacks are NOT stored — the IP's own step
 # algebra maintains s_lo ≡ r − lb and s_hi ≡ ub − r exactly (ss_lo =
 # r_step + Ci_lo with Ci_lo ≡ 0 from a feasible start — the identity
@@ -76,15 +77,6 @@ BASE_NAMES = ["row_id", "w0", "idx", "val"]
 # _newton_system), so ``_cols`` derives them per pass and every state
 # commit writes 24 B/row instead of 40.
 STATE_NAMES = ["ratio", "lm_lo", "lm_hi"]
-
-# Both zip sides must carry the IDENTICAL batched serializer: ``RDD.zip``
-# falls back to an extra re-serialization pass over BOTH rdds whenever the
-# batch sizes differ (pyspark/core/rdd.py, ``zip``), silently turning every
-# cached read into cache-read + re-pickle (measured 3.6× slower passes in
-# the spike).  Batch size 1 is right regardless: each element is already a
-# multi-MB Arrow IPC blob.
-_ZIP_SER = BatchedSerializer(CPickleSerializer(), 1)
-
 
 def _cols(rb: pa.RecordBatch, lb: float, ub: float, has_ub: bool):
     """State columns with the slacks DERIVED (see STATE_NAMES): s_lo =
@@ -306,70 +298,11 @@ def _estep_pass(k, lam, dlam, eta, mu_s, lb, ub, has_ub) -> Callable:
     return fn
 
 
-def _ipc_ser(rb: pa.RecordBatch) -> bytes:
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, rb.schema) as w:
-        w.write_batch(rb)
-    return sink.getvalue().to_pybytes()
-
-
-def _ipc_deser(b: bytes) -> pa.RecordBatch:
-    return pa.ipc.open_stream(pa.BufferReader(b)).read_next_batch()
-
-
 def _state_rb(arrays) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         [pa.array(np.ascontiguousarray(a, dtype=np.float64)) for a in arrays],
         STATE_NAMES,
     )
-
-
-def _combined_iter(pair_iter) -> Iterator[pa.RecordBatch]:
-    """zip pairs → one combined RecordBatch, zero-copy (same buffers).
-    The combined schema inherits the BASE blob's schema (column names AND
-    metadata — a dense-elided base has no idx column, and the stamp that
-    lets ``_flatten_rb`` resynthesize it must survive the zip).  State
-    elements are either plain IPC bytes or the fused commit+stats cache's
-    ``(state_ipc, sums, mins)`` tuples (payload piggybacked on the last
-    batch — see ``_ecommit_stats_pass``); unwrap the latter."""
-    for bb, sb in pair_iter:
-        if isinstance(sb, tuple):
-            sb = sb[0]
-        base_rb = _ipc_deser(bytes(bb))
-        st_rb = _ipc_deser(bytes(sb))
-        fields = [
-            *(base_rb.schema.field(i) for i in range(base_rb.num_columns)),
-            *(st_rb.schema.field(i) for i in range(st_rb.num_columns)),
-        ]
-        yield pa.RecordBatch.from_arrays(
-            list(base_rb.columns) + list(st_rb.columns),
-            schema=pa.schema(fields, metadata=base_rb.schema.metadata),
-        )
-
-
-def _payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a combined-batch kernel pass into a zip-pair ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(pair_iter):
-        for rb in pass_fn(_combined_iter(pair_iter)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def _merge_payload(a, b):
-    sums = np.frombuffer(a[0], dtype=np.float64) + np.frombuffer(
-        b[0], dtype=np.float64
-    )
-    mins = np.minimum(
-        np.frombuffer(a[1], dtype=np.float64),
-        np.frombuffer(b[1], dtype=np.float64),
-    )
-    return (sums.tobytes(), mins.tobytes())
 
 
 # Fused commit+stats pays off only when the state cache is big enough
@@ -420,13 +353,13 @@ def _decode_sums(buf: bytes, wire32: bool) -> np.ndarray:
 def _ecommit_state_pass(
     lam, dlam, eta, mu_s, alpha_p, alpha_d, lb, ub, has_ub
 ) -> Callable:
-    """Per-pair commit, RECOMPUTE form (the fallback when no matching
-    step cache exists — see ``elastic_commit``): recompute the step on
-    the CURRENT state and emit only the next state blob — the immutable
-    base columns are never rewritten."""
+    """Commit, RECOMPUTE form (the chained lazy swap — see
+    ``elastic_commit``): recompute the step on the CURRENT state and emit
+    only the next state blob — the immutable base columns are never
+    rewritten."""
 
-    def fn(pair_iter):
-        for rb in _combined_iter(pair_iter):
+    def fn(batches: Iterator[pa.RecordBatch]):
+        for rb in batches:
             flat_idx, flat_val, lens = _flatten_rb(rb)
             pieces = _pieces(
                 rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
@@ -435,7 +368,7 @@ def _ecommit_state_pass(
                 pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub
             )
             _, r, _s_lo, _s_hi, lm_lo, lm_hi = _cols(rb, lb, ub, has_ub)
-            yield _ipc_ser(
+            yield ipc_ser(
                 _state_rb(
                     [
                         r + alpha_p * r_step,
@@ -454,32 +387,31 @@ def _ecommit_stats_pass(
     skip_gram: bool = False,
 ) -> Callable:
     """FUSED commit+stats — the r9 commit-bandwidth cut.  One pass over
-    ``base.zip(old_state)`` per batch: replay the pending commit (step
+    the zipped base and old state, per batch: replay the pending commit (step
     recompute at the COMMIT-time parameters, then the α-combine), yield
-    the new state blob as a cache element (``("s", ipc, b"")``), and feed
-    the new state straight into the stats accumulation at the STATS-time
-    parameters; one ``("p", sums, mins)`` payload element closes the
-    partition.  The persisted RDD therefore IS the new state cache (a
-    element shape is ``(state_ipc, sums, mins)`` with the partition
-    payload piggybacked on the LAST batch's element (empty bytes on the
-    others), so the element count per partition equals the batch count —
+    the new state blob as a cache element, and feed the new state straight
+    into the stats accumulation at the STATS-time parameters.  The
+    persisted RDD therefore IS the new state cache (each element is
+    ``(state_ipc, sums, mins)`` with the partition payload piggybacked on
+    the LAST batch's element (empty bytes on the others), so the element
+    count per partition equals the batch count —
     later passes ``zip`` this cache with the base cache DIRECTLY at the
     JVM level (an element-count-preserving view through a Python
     ``filter`` would force every later read through an extra
     Python→JVM→Python round trip, measured +2.3 s/pass at 100M)) AND the
-    stats source — versus the r8 shape (new state = nested
-    ``base.zip(prev)`` inside the outer stats zip) this reads the multi-GB
+    stats source — versus the r8 shape (new state = a nested base/prev
+    zip inside the outer stats zip) this reads the multi-GB
     base cache ONCE instead of twice and flattens each batch once instead
     of twice.  Payload bytes ride the state cache until the next commit
     replaces it: K-sized per partition — negligible at small K, bounded
     by partitions × (3K+Σk_b²)·8 B on the grouped huge-K path (~1.6 GB at
     K=100k × 400 partitions, transient)."""
 
-    def fn(pair_iter):
+    def fn(batches: Iterator[pa.RecordBatch]):
         acc = _EStatsAcc(k, blocks, skip_gram)
         n_state = len(STATE_NAMES)
         held = None
-        for rb in _combined_iter(pair_iter):
+        for rb in batches:
             flat_idx, flat_val, lens = _flatten_rb(rb)
             pieces = _pieces(
                 rb, flat_idx, flat_val, lens, clam, ceta, cmu_s, lb, ub,
@@ -498,7 +430,7 @@ def _ecommit_stats_pass(
             )
             if held is not None:
                 yield (held, b"", b"")
-            held = _ipc_ser(st_rb)
+            held = ipc_ser(st_rb)
             nb = rb.num_columns - n_state
             fields = [rb.schema.field(i) for i in range(nb)] + [
                 st_rb.schema.field(j) for j in range(st_rb.num_columns)
@@ -522,45 +454,16 @@ def _ecommit_stats_pass(
     return fn
 
 
-def _g1_pass(k, validate: bool = False) -> Callable:
-    """``validate``: append the V1 bad-entry counts to the payload — the
-    deferred validation rides this first pass (which also materializes
-    both blob caches) instead of running its own aggregate."""
-    from entropy_balance_weighting_spark.kernels.spark import count_bad_entries
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        g1 = np.zeros(k)
-        bad_x = bad_w = 0.0
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            if validate:
-                bx, bw = count_bad_entries(flat_val, lens, w0)
-                bad_x += bx
-                bad_w += bw
-            r = _rb_col(rb, "ratio")
-            g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-        sums = [g1, bad_x, bad_w] if validate else [g1]
-        yield _pack_rb(sums, [np.inf])
-
-    return fn
-
-
 class ElasticSparkKernel:
-    _CKPT_EVERY = 8
     # the solver's gram-reuse policy may call elastic_stats(need_gram=
     # False) — lagged-Jacobian iterations (solvers/elastic.py)
     supports_gram_skip = True
 
     def __init__(
-        self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
+        self, store, k: int, sum_w0: float, n: int,
         lb: float, ub: float, has_ub: bool, block_structure=None,
     ) -> None:
-        self._base = base_rdd
-        self._state = state_rdd
-        self._spark = spark
+        self._store = store
         self.k = k
         self.sum_w0 = sum_w0
         self.n = n
@@ -568,19 +471,10 @@ class ElasticSparkKernel:
         self.ub = ub
         self.has_ub = has_ub
         self.block_structure = block_structure
-        self._prev = None
-        self._commits_since_ckpt = 0
-        # _store: the PERSISTED rdd behind the current state; _state may
-        # be a filter/map view of it (the fused commit+stats cache whose
-        # elements also carry the partition payloads)
-        self._store = state_rdd
         # pending lazy commit parameters (lam, dlam, eta, mu_s, αp, αd) —
         # applied by the next elastic_stats as the fused pass, or flushed
         # into a chained lazy state swap by any other consumer
         self._pending = None
-        # deferred V1 validation flag — armed by the API layer, consumed
-        # by the first elastic_g1 pass (see defer_validation)
-        self._validate_first_pass = False
         # mixed-precision wire (r10): when True (the DEFAULT), the
         # stats payload tail is always float64.  The elastic solver
         # flips it per-iteration only under options={"payload_wire32":
@@ -606,202 +500,45 @@ class ElasticSparkKernel:
         known_sums: tuple[float, int] | None = None,
         prepacked: DataFrame | None = None,
     ) -> "ElasticSparkKernel":
+        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
+
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         lb = max(float(bounds[0]), 0.0)
         has_ub = bounds[1] is not None
         ub = float(bounds[1]) if has_ub else 0.0
 
-        if ratio_guess is None:
-            # Fast path (the common case): the start ratio is the constant
-            # 1.0, so bounds validation is a driver-side scalar check and
-            # the state derives from the cached base with no extra source
-            # scan — one generator pass total.
-            if not (lb < 1.0 and (not has_ub or 1.0 < ub)):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                )
-
-            def to_base(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if rb.num_rows:
-                        out = maybe_elide_idx(rb, k)
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array([_ipc_ser(out)], type=pa.binary())],
-                            ["payload"],
-                        )
-
-            base_rdd = (
-                df.select(*BASE_NAMES)
-                .mapInArrow(to_base, "payload binary")
-                .rdd.map(lambda r: bytes(r[0]))
-            )
-            from entropy_balance_weighting_spark.kernels.spark import (
-                adaptive_blob_partitions,
+        def state_of(ratio: np.ndarray) -> pa.RecordBatch:
+            return _state_rb(
+                [
+                    ratio,
+                    np.full(len(ratio), 0.05),
+                    np.full(len(ratio), 0.05 if has_ub else 0.0),
+                ]
             )
 
-            p = adaptive_blob_partitions(
-                df.sparkSession, n, base_rdd.getNumPartitions()
-            )
-            if p is not None:
-                # small problem: encode at full parallelism, move the
-                # finished blobs once; every pass then runs p tasks
-                # (guide §2.2 — see adaptive_blob_partitions)
-                base_rdd = base_rdd.coalesce(p, shuffle=True)
-            base_rdd = base_rdd._reserialize(_ZIP_SER).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            # no base_rdd.count(): the state-init job below computes base
-            # partitions through the persist, materializing BOTH caches in
-            # ONE source scan (r8 pack-cost work, PLANS.md sec. 13)
-
-            def init_state(payloads):
-                for b in payloads:
-                    nr = _ipc_deser(bytes(b)).num_rows
-                    yield _ipc_ser(
-                        _state_rb(
-                            [
-                                np.ones(nr),
-                                np.full(nr, 0.05),
-                                np.full(nr, 0.05 if has_ub else 0.0),
-                            ]
-                        )
-                    )
-
-            state_rdd = (
-                base_rdd.mapPartitions(init_state, preservesPartitioning=True)
-                ._reserialize(_ZIP_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # no eager count: the solve's first pass (elastic_g1's
-            # base.zip(state) reduce) materializes BOTH caches in one job
-            # — one fewer job per solve (r13 optimization; the
-            # warm-start path below keeps its eager count because the
-            # bounds-validation raise must surface at construction)
-        else:
-            base_rdd, state_rdd = cls._build_with_guess(
-                df, ratio_guess, k, lb, ub, has_ub, n
-            )
-        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
-
+        # without a guess no job runs here: the solve's first pass
+        # (elastic_g1's reduce over the zipped caches) materializes both
+        store = BlobStore.build(
+            df,
+            k,
+            n,
+            ratio_guess=ratio_guess,
+            state_of=state_of,
+            bounds=(lb, ub if has_ub else None),
+        )
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
-        return cls(
-            base_rdd, state_rdd, df.sparkSession, k, sum_w0, n, lb, ub,
-            has_ub, block_structure=bs,
-        )
-
-    @staticmethod
-    def _build_with_guess(df, ratio_guess, k, lb, ub, has_ub, n):
-        """Warm-start path: the per-row start ratio comes from a DataFrame,
-        so one Arrow pass renders each batch into aligned (base, state) IPC
-        blobs and the per-row bounds validation rides that same scan."""
-        df = df.join(
-            ratio_guess.select("row_id", "ratio"), "row_id", "left"
-        ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-        def to_pair(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                ratio = _rb_col(rb, "ratio")
-                s_lo = ratio - lb
-                s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
-                if (s_lo <= 0).any() or (has_ub and (s_hi <= 0).any()):
-                    raise ValueError(
-                        "bounds must strictly contain the initial ratio guess"
-                    )
-                base_rb = maybe_elide_idx(
-                    pa.RecordBatch.from_arrays(
-                        [
-                            rb.column(rb.schema.get_field_index(c))
-                            for c in BASE_NAMES
-                        ],
-                        BASE_NAMES,
-                    ),
-                    k,
-                )
-                st_rb = _state_rb(
-                    [
-                        ratio,
-                        np.full(len(ratio), 0.05),
-                        np.full(len(ratio), 0.05 if has_ub else 0.0),
-                    ]
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([_ipc_ser(base_rb)], type=pa.binary()),
-                        pa.array([_ipc_ser(st_rb)], type=pa.binary()),
-                    ],
-                    ["base", "state"],
-                )
-
-        pair_rdd = (
-            df.select("row_id", "w0", "idx", "val", "ratio")
-            .mapInArrow(to_pair, "base binary, state binary")
-            .rdd.map(lambda r: (bytes(r[0]), bytes(r[1])))
-        )
-        from entropy_balance_weighting_spark.kernels.spark import (
-            adaptive_blob_partitions,
-        )
-
-        p = adaptive_blob_partitions(
-            df.sparkSession, n, pair_rdd.getNumPartitions()
-        )
-        if p is not None:
-            pair_rdd = pair_rdd.coalesce(p, shuffle=True)
-        pair_rdd = pair_rdd._reserialize(_ZIP_SER).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        base_rdd = (
-            pair_rdd.map(lambda t: t[0], preservesPartitioning=True)
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        state_rdd = (
-            pair_rdd.map(lambda t: t[1], preservesPartitioning=True)
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            base_rdd.count()
-        except Exception as exc:
-            if "bounds must strictly contain" in str(exc):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                ) from None
-            raise
-        state_rdd.count()  # reads the pair cache, not the source scan
-        pair_rdd.unpersist(blocking=True)
-        return base_rdd, state_rdd
+        return cls(store, k, sum_w0, n, lb, ub, has_ub, block_structure=bs)
 
     def _reduce(self, fn, big: bool = False, pairs=None, wire32: bool = False):
-        if pairs is None:
-            pairs = self._base.zip(self._state).mapPartitions(
-                _payload_adapter(fn), preservesPartitioning=True
+        if wire32:
+            return self._store.reduce(
+                fn,
+                big,
+                pairs=pairs,
+                merge=_merge_payload_mixed,
+                decode=lambda buf: _decode_sums(buf, True),
             )
-        if big:
-            # dense K² Gram payloads: merge executor-side so the driver
-            # receives O(tree-fanout) blobs, same gate as collect_payload
-            sums_b, mins_b = pairs.treeReduce(
-                _merge_payload_mixed if wire32 else _merge_payload
-            )
-            sums = _decode_sums(sums_b, wire32)
-            mins = np.frombuffer(mins_b, dtype=np.float64).copy()
-        else:
-            rows = pairs.collect()
-            if not rows:
-                raise ValueError(
-                    "elastic kernel reduce returned no partition payloads "
-                    "(empty problem?)"
-                )
-            sums = np.sum([_decode_sums(s, wire32) for s, _ in rows], axis=0)
-            mins = np.min(
-                [np.frombuffer(m, dtype=np.float64) for _, m in rows], axis=0
-            )
-        # the reduce materialized any flushed lazy commit into its cache
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._prev = None
-        return sums, mins
+        return self._store.reduce(fn, big, pairs=pairs)
 
     @property
     def gram_payload_bytes(self) -> int:
@@ -819,22 +556,13 @@ class ElasticSparkKernel:
         self._wire_full = bool(full)
 
     def defer_validation(self) -> None:
-        """Arm the fused V1 check: the next ``elastic_g1`` pass (the
-        solve's first job, which also materializes both blob caches)
-        counts bad X rows / bad weights in its payload and raises the
-        same ValueError the eager aggregate would."""
-        self._validate_first_pass = True
+        """Arm the fused V1 check on the first pass — ``elastic_g1``, the
+        solve's first job, which also materializes both blob caches."""
+        self._store.defer_validation()
 
     def elastic_g1(self) -> np.ndarray:
-        from entropy_balance_weighting_spark.kernels.spark import raise_if_bad
-
         self._flush_pending_lazy()
-        validate = getattr(self, "_validate_first_pass", False)
-        sums, _ = self._reduce(_g1_pass(self.k, validate=validate))
-        if validate:
-            self._validate_first_pass = False
-            raise_if_bad(sums[-2], sums[-1])
-            sums = sums[:-2]
+        sums, _ = self._reduce(_moment_totals_pass(self.k))
         return sums
 
     def elastic_stats(self, lam, eta, mu_s, *, need_gram: bool = True) -> EStats:
@@ -850,7 +578,7 @@ class ElasticSparkKernel:
         big = reduce_big(
             k,
             self.block_structure,
-            self._base.getNumPartitions(),
+            self._store.num_partitions,
             gram_nbytes=g_bytes,
         )
         # float32 wire for the K-sized payload tail, gated on size so
@@ -869,41 +597,28 @@ class ElasticSparkKernel:
             # stats path.
             self._flush_pending_lazy()
         if self._pending is not None:
-            # Fused commit+stats: ONE pass over base.zip(old_state) whose
-            # persisted elements are the new state blobs + partition
-            # payloads — the base cache crosses once, not twice (r9).
+            # Fused commit+stats: ONE pass over the zipped base and old
+            # state whose persisted elements are the new state blobs +
+            # partition payloads — the base cache crosses once, not twice
+            # (r9).  Later passes zip this cache with the base at the JVM
+            # level and the store's zip iterator unwraps the
+            # (state, sums, mins) tuples.
             clam, cdlam, ceta, cmu_s, ap, ad = self._pending
             self._pending = None
-            fused = (
-                self._base.zip(self._state)
-                .mapPartitions(
-                    _ecommit_stats_pass(
-                        k, clam, cdlam, ceta, cmu_s, ap, ad,
-                        lam, eta, mu_s, self.lb, self.ub, self.has_ub,
-                        blocks_tuple(self.block_structure), wire32,
-                        skip_gram,
-                    ),
-                    preservesPartitioning=True,
+            fused = self._store.commit(
+                _ecommit_stats_pass(
+                    k, clam, cdlam, ceta, cmu_s, ap, ad,
+                    lam, eta, mu_s, self.lb, self.ub, self.has_ub,
+                    blocks_tuple(self.block_structure), wire32,
+                    skip_gram,
                 )
-                ._reserialize(_ZIP_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            self._commits_since_ckpt += 1
-            if self._commits_since_ckpt >= self._CKPT_EVERY:
-                fused.localCheckpoint()
-                self._commits_since_ckpt = 0
             payloads = fused.map(lambda t: (t[1], t[2])).filter(
                 lambda t: len(t[0]) > 0
             )
-            prev_store = self._store
             sums, mins = self._reduce(
                 None, big=big, pairs=payloads, wire32=wire32
             )
-            prev_store.unpersist()
-            self._store = fused
-            # consumers zip this cache with the base at the JVM level and
-            # unwrap the (state, sums, mins) tuples in _combined_iter
-            self._state = fused
         else:
             sums, mins = self._reduce(
                 _estats_pass(
@@ -965,25 +680,11 @@ class ElasticSparkKernel:
             return
         clam, cdlam, ceta, cmu_s, ap, ad = self._pending
         self._pending = None
-        new_state = (
-            self._base.zip(self._state)
-            .mapPartitions(
-                _ecommit_state_pass(
-                    clam, cdlam, ceta, cmu_s, ap, ad, self.lb, self.ub,
-                    self.has_ub,
-                ),
-                preservesPartitioning=True,
+        self._store.commit(
+            _ecommit_state_pass(
+                clam, cdlam, ceta, cmu_s, ap, ad, self.lb, self.ub, self.has_ub
             )
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_state.localCheckpoint()
-            self._commits_since_ckpt = 0
-        self._prev = self._store
-        self._store = new_state
-        self._state = new_state
 
     def elastic_commit(
         self, lam, dlam, eta, mu_s, alpha_p, alpha_d
@@ -1010,40 +711,21 @@ class ElasticSparkKernel:
         )
 
     def new_weights(self) -> DataFrame:
-        """(row_id, new_weight = ratio·w0) as a DataFrame — Arrow blobs end
-        to end; the per-batch IPC payloads cross the RDD→DataFrame seam as
-        single binary rows, then ``mapInArrow`` explodes them JVM-side."""
+        """(row_id, new_weight = ratio·w0) as a DataFrame."""
         self._flush_pending_lazy()
 
-        def to_weights(pair_iter):
-            for rb in _combined_iter(pair_iter):
-                out = pa.RecordBatch.from_arrays(
+        def render(batches: Iterator[pa.RecordBatch]):
+            for rb in batches:
+                yield pa.RecordBatch.from_arrays(
                     [
                         rb.column(rb.schema.get_field_index("row_id")),
                         pa.array(_rb_col(rb, "ratio") * _rb_col(rb, "w0")),
                     ],
                     ["row_id", "new_weight"],
                 )
-                yield (_ipc_ser(out),)
 
-        payload = self._base.zip(self._state).mapPartitions(
-            to_weights, preservesPartitioning=True
-        )
-
-        def unpack(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                for blob in rb.column(0).to_pylist():
-                    yield _ipc_deser(blob)
-
-        return self._spark.createDataFrame(
-            payload, "payload binary"
-        ).mapInArrow(unpack, "row_id bigint, new_weight double")
+        return self._store.weights_df(render)
 
     def cleanup(self) -> None:
-        self._base.unpersist(blocking=True)
-        self._store.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
         self._pending = None
-        _post_cleanup_gc(self._spark.sparkContext)
+        self._store.cleanup()

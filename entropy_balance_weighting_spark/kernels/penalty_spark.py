@@ -1,9 +1,10 @@
 """Distributed kernel for the penalty solver — split-state Arrow blobs
 over an RDD ``zip``, same execution design as the elastic kernel (one
 fused scan per stage, zero per-iteration shuffles, only K/K²-sized
-partials cross the driver boundary; lineage truncated per commit; the
-immutable CSR base is cached ONCE as pre-encoded IPC blobs and never
-rewritten — commits re-cache only the mutable state columns).
+partials cross the driver boundary; the immutable CSR base is cached ONCE
+as pre-encoded IPC blobs and never rewritten — commits re-cache only the
+mutable state columns).  The caches and their lifecycle live in a
+split-state :class:`~entropy_balance_weighting_spark.kernels.blobstore.BlobStore`.
 
 State columns: ``ratio`` always (8 B/row); bounded mode adds ``s_lo,
 lm_lo, s_hi, lm_hi`` (slacks and inequality multipliers per bound side —
@@ -17,41 +18,29 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from entropy_balance_weighting_spark.kernels.base import (
     PBStats,
     PBStepStats,
     PenaltyStats,
 )
+from entropy_balance_weighting_spark.kernels.blobstore import BlobStore
 from entropy_balance_weighting_spark.kernels.penalty_local import TAU
 from entropy_balance_weighting_spark.kernels.spark import (
-    _post_cleanup_gc,
     _flatten_rb,
     _pack_rb,
     _rb_col,
-    _rb_with,
     _x_dot,
     _xt_v,
-    BLOB_SER,
     blocks_tuple,
-    gram_bytes,
     reduce_big,
     gram_from_sums,
-    ipc_deser,
     ipc_ser,
     make_gram_accum,
-    maybe_elide_idx,
     pack_rows,
-    reduce_blob_payload,
-    zip_payload_adapter,
-    zip_state_commit_adapter,
-    zip_weights_df,
 )
 
-BASE_NAMES = ["row_id", "w0", "idx", "val"]
 UNBOUNDED_STATE = ["ratio"]
 BOUNDED_STATE = ["ratio", "s_lo", "lm_lo", "s_hi", "lm_hi"]
 
@@ -78,6 +67,9 @@ def _gram_init_pass(k: int, blocks) -> Callable:
 
 
 def _moment_totals_pass(k: int) -> Callable:
+    """Xᵀ(w0·ratio): the penalty solve's moment totals, and the elastic
+    solve's first pass."""
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         g1 = np.zeros(k)
         for rb in batches:
@@ -124,17 +116,32 @@ def _pstats_pass(k: int, blocks) -> Callable:
     return fn
 
 
+def _state_blob(rb: pa.RecordBatch, names, **new: np.ndarray) -> bytes:
+    """The next state blob: the ``names`` columns of ``rb``, with the
+    ``new`` ones replaced."""
+    return ipc_ser(
+        pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.asarray(new[c], dtype=np.float64), type=pa.float64())
+                if c in new
+                else rb.column(rb.schema.get_field_index(c))
+                for c in names
+            ],
+            names,
+        )
+    )
+
+
 def _pcommit_pass(z: np.ndarray) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[bytes]:
         for rb in batches:
-            if not rb.num_rows:
-                yield rb
-                continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
             r = _rb_col(rb, "ratio")
             with np.errstate(divide="ignore", invalid="ignore"):
                 p = -r * (np.log(r) + _x_dot(flat_idx, flat_val, lens, z))
-            yield _rb_with(rb, ratio=r + np.where(np.isfinite(p), p, 0.0))
+            yield _state_blob(
+                rb, UNBOUNDED_STATE, ratio=r + np.where(np.isfinite(p), p, 0.0)
+            )
 
     return fn
 
@@ -265,11 +272,8 @@ def _pbstep_pass(z: np.ndarray, mu: float, has_ub: bool) -> Callable:
 def _pbcommit_pass(
     z: np.ndarray, mu: float, bp: float, bd: float, has_ub: bool
 ) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[bytes]:
         for rb in batches:
-            if not rb.num_rows:
-                yield rb
-                continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
             p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
                 rb, flat_idx, flat_val, lens, z, mu, has_ub
@@ -282,7 +286,7 @@ def _pbcommit_pass(
             if has_ub:
                 new_cols["s_hi"] = s_hi - bp * p
                 new_cols["lm_hi"] = lm_hi + bd * dl_hi
-            yield _rb_with(rb, **new_cols)
+            yield _state_blob(rb, BOUNDED_STATE, **new_cols)
 
     return fn
 
@@ -290,24 +294,17 @@ def _pbcommit_pass(
 class PenaltySparkKernel:
     """Distributed penalty kernel over split-state Arrow blobs."""
 
-    _CKPT_EVERY = 8
-
     def __init__(
-        self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
+        self, store, k: int, sum_w0: float, n: int,
         has_ub: bool, bounded: bool, block_structure=None,
     ) -> None:
-        self._base = base_rdd
-        self._state = state_rdd
-        self._spark = spark
+        self._store = store
         self.k = k
         self.sum_w0 = sum_w0
         self.n = n
         self.has_ub = has_ub
         self.bounded = bounded
         self.block_structure = block_structure
-        self._state_names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
-        self._prev = None
-        self._commits_since_ckpt = 0
 
     @classmethod
     def from_problem(
@@ -322,184 +319,48 @@ class PenaltySparkKernel:
         known_sums: tuple[float, int] | None = None,
         prepacked: DataFrame | None = None,
     ) -> "PenaltySparkKernel":
+        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
+
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         bounded = bounds is not None
         has_ub = bounded and bounds[1] is not None
         lb = max(float(bounds[0]), 0.0) if bounded else 0.0
         ub = float(bounds[1]) if has_ub else 0.0
 
-        def state_arrays(ratio: np.ndarray) -> list[np.ndarray]:
-            """Initial state from a start ratio (validated by caller)."""
-            if not bounded:
-                return [ratio]
-            s_lo = ratio - lb
-            s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
-            lm_hi = 1.0 / s_hi if has_ub else np.zeros(len(ratio))
-            return [ratio, s_lo, 1.0 / s_lo, s_hi, lm_hi]
-
-        def state_rb(ratio: np.ndarray) -> pa.RecordBatch:
-            names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
+        def state_of(ratio: np.ndarray) -> pa.RecordBatch:
+            """Initial state from a start ratio (bounds-checked by the store)."""
+            arrays = [ratio]
+            if bounded:
+                s_lo = ratio - lb
+                s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
+                lm_hi = 1.0 / s_hi if has_ub else np.zeros(len(ratio))
+                arrays = [ratio, s_lo, 1.0 / s_lo, s_hi, lm_hi]
             return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.ascontiguousarray(a, dtype=np.float64))
-                    for a in state_arrays(ratio)
-                ],
-                names,
+                [pa.array(np.ascontiguousarray(a, dtype=np.float64)) for a in arrays],
+                BOUNDED_STATE if bounded else UNBOUNDED_STATE,
             )
 
-        if ratio_guess is None:
-            # Constant start ratio 1.0: bounds validation is a driver-side
-            # scalar check; the state derives from the cached base with no
-            # extra source scan.
-            if bounded and not (lb < 1.0 and (not has_ub or 1.0 < ub)):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                )
-
-            def to_base(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if rb.num_rows:
-                        out = maybe_elide_idx(rb, k)
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array([ipc_ser(out)], type=pa.binary())],
-                            ["payload"],
-                        )
-
-            base_rdd = (
-                df.select(*BASE_NAMES)
-                .mapInArrow(to_base, "payload binary")
-                .rdd.map(lambda r: bytes(r[0]))
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # no base_rdd.count(): the state-init job below computes base
-            # partitions through the persist, materializing BOTH caches in
-            # ONE source scan (r8 pack-cost work, PLANS.md sec. 13)
-
-            def init_state(payloads):
-                for b in payloads:
-                    nr = ipc_deser(bytes(b)).num_rows
-                    yield ipc_ser(state_rb(np.ones(nr)))
-
-            state_rdd = (
-                base_rdd.mapPartitions(init_state, preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            state_rdd.count()  # reads the base cache, not the source scan
-        else:
-            # Warm-start path: per-row ratio → one Arrow pass renders
-            # aligned (base, state) blobs; per-row bounds validation rides
-            # that same scan.
-            df_g = df.join(
-                ratio_guess.select("row_id", "ratio"), "row_id", "left"
-            ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-            def to_pair(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    ratio = _rb_col(rb, "ratio")
-                    if bounded and (
-                        (ratio - lb <= 0).any()
-                        or (has_ub and (ub - ratio <= 0).any())
-                    ):
-                        raise ValueError(
-                            "bounds must strictly contain the initial "
-                            "ratio guess"
-                        )
-                    base_rb = maybe_elide_idx(
-                        pa.RecordBatch.from_arrays(
-                            [
-                                rb.column(rb.schema.get_field_index(c))
-                                for c in BASE_NAMES
-                            ],
-                            BASE_NAMES,
-                        ),
-                        k,
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([ipc_ser(base_rb)], type=pa.binary()),
-                            pa.array([ipc_ser(state_rb(ratio))], type=pa.binary()),
-                        ],
-                        ["base", "state"],
-                    )
-
-            pair_rdd = (
-                df_g.select(*BASE_NAMES, "ratio")
-                .mapInArrow(to_pair, "base binary, state binary")
-                .rdd.map(lambda r: (bytes(r[0]), bytes(r[1])))
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            base_rdd = (
-                pair_rdd.map(lambda t: t[0], preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            state_rdd = (
-                pair_rdd.map(lambda t: t[1], preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                base_rdd.count()
-            except Exception as exc:
-                if "bounds must strictly contain" in str(exc):
-                    raise ValueError(
-                        "bounds must strictly contain the initial ratio guess"
-                    ) from None
-                raise
-            state_rdd.count()  # reads the pair cache, not the source scan
-            pair_rdd.unpersist(blocking=True)
-
-        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
-
+        store = BlobStore.build(
+            df,
+            k,
+            n,
+            ratio_guess=ratio_guess,
+            state_of=state_of,
+            bounds=(lb, ub if has_ub else None) if bounded else None,
+        )
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
-        return cls(
-            base_rdd, state_rdd, df.sparkSession, k, sum_w0, n, has_ub,
-            bounded, block_structure=bs,
-        )
+        return cls(store, k, sum_w0, n, has_ub, bounded, block_structure=bs)
 
-    # -- plumbing ----------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        pairs = self._base.zip(self._state).mapPartitions(
-            zip_payload_adapter(fn), preservesPartitioning=True
-        )
-        sums, mins = reduce_blob_payload(pairs, big)
-        # a reduce materializes any pending lazy commit into its cache
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._prev = None
-        return sums, mins
+        return self._store.reduce(fn, big)
 
     @property
     def _gram_big(self) -> bool:
-        return reduce_big(
-            self.k, self.block_structure, self._base.getNumPartitions()
-        )
+        return reduce_big(self.k, self.block_structure, self._store.num_partitions)
 
-    def _commit(self, fn) -> None:
-        """Lazy state transition: persisted, materialized by the next
-        reduce in the same scan (no standalone commit job); only the
-        mutable state columns are re-cached.  Lineage truncated every
-        ``_CKPT_EVERY`` commits."""
-        new_state = (
-            self._base.zip(self._state)
-            .mapPartitions(
-                zip_state_commit_adapter(fn, self._state_names),
-                preservesPartitioning=True,
-            )
-            ._reserialize(BLOB_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_state.localCheckpoint()
-            self._commits_since_ckpt = 0
-        self._prev = self._state
-        self._state = new_state
+    def defer_validation(self) -> None:
+        """Arm the fused V1 check on the first pass (``penalty_init``)."""
+        self._store.defer_validation()
 
     # -- shared ------------------------------------------------------------
     def penalty_init(self):
@@ -527,15 +388,10 @@ class PenaltySparkKernel:
                     ["row_id", "new_weight"],
                 )
 
-        return zip_weights_df(self._spark, self._base, self._state, render)
+        return self._store.weights_df(render)
 
     def cleanup(self) -> None:
-        self._base.unpersist(blocking=True)
-        self._state.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
-        _post_cleanup_gc(self._spark.sparkContext)
+        self._store.cleanup()
 
     # -- unbounded ---------------------------------------------------------
     def penalty_stats(self) -> PenaltyStats:
@@ -561,7 +417,7 @@ class PenaltySparkKernel:
 
     def penalty_commit(self, z: np.ndarray) -> tuple[float, bool]:
         sums, _ = self._reduce(_pstep_sq_pass(z))
-        self._commit(_pcommit_pass(z))
+        self._store.commit(_pcommit_pass(z))
         return float(sums[0]), sums[1] > 0
 
     # -- bounded -----------------------------------------------------------
@@ -603,4 +459,4 @@ class PenaltySparkKernel:
         )
 
     def pb_commit(self, z: np.ndarray, mu: float, bp: float, bd: float) -> None:
-        self._commit(_pbcommit_pass(z, mu, bp, bd, self.has_ub))
+        self._store.commit(_pbcommit_pass(z, mu, bp, bd, self.has_ub))

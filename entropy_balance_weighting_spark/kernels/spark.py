@@ -21,7 +21,10 @@ DataFrame.  A `mapInArrow` scan over a cached DataFrame re-encodes the
 Tungsten columnar cache into Arrow on EVERY pass — measured 10.2 s/pass at
 N=20M K=8 — while a cached pre-encoded blob ships straight into the Python
 worker and opens zero-copy: 1.6 s for the identical math
-(PLANS.md §11; the elastic kernel found this first).
+(PLANS.md §11; the elastic kernel found this first).  The blob caches of
+all three distributed kernels live in ``kernels/blobstore.py``; this module
+keeps the blob format (elision, IPC, partition sizing), the per-batch math
+the kernels share, and the Newton kernel's own passes.
 
 Why whole-pass batch jobs and not joins/explodes: the per-iteration
 primitives (segment dot products, Gram accumulation) are BLAS-shaped;
@@ -36,9 +39,9 @@ steps) replayed against the immutable once-cached base by every pass, so
 no N-row cache is ever rewritten mid-solve (2 map-only jobs per
 iteration, zero cache churn).  Only a long primal chain (or a warm-start
 state) falls back to a lazy persisted blob rewrite, materialized by the
-NEXT stats scan; an RDD ``localCheckpoint`` every few such commits
-truncates lineage so long solves never grow an unbounded plan — the
-classic iterative-MLlib pitfall (SURVEY §4 caching note).
+NEXT stats scan; the store truncates lineage every few such commits so
+long solves never grow an unbounded plan — the classic iterative-MLlib
+pitfall (SURVEY §4 caching note).
 """
 
 from __future__ import annotations
@@ -47,25 +50,12 @@ import warnings
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import StorageLevel
-from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
-
-# NOTE: mapInArrow matches yielded batches to this schema BY POSITION (unlike
-# mapInPandas' by-name matching) — the order below must equal the working
-# DataFrame's column order exactly.
-# Blob width is pack/crossing/cache COST (r8): q (= w0/Σw0) and the start
-# wstar (analytic, see _w_state) are recomputed per pass for one divide —
-# 16 B/row cheaper to ship and store; wstar appears in the blob only when
-# a warm-start guess or a materialized commit actually needs it.
-PACKED_NAMES = ["row_id", "w0", "idx", "val"]
-_PAYLOAD_SCHEMA = "sums binary, mins binary"
 
 # Dense-idx elision: when every row of a batch has idx == [0..k), the idx
 # list column is pure redundancy — k·4 B/row (a quarter of a k=8 blob)
@@ -99,13 +89,6 @@ def maybe_elide_idx(rb: pa.RecordBatch, k: int) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         arrays, schema=pa.schema(fields, metadata=meta)
     )
-
-# Identical batched serializer on every cached blob RDD: RDD.zip (the
-# elastic kernel's base↔state align) silently re-pickles BOTH sides per job
-# when batch sizes differ, and a uniform serializer keeps every kernel's
-# cache zip-compatible.  Batch size 1 is right regardless — each element is
-# already a multi-MB Arrow IPC blob.
-BLOB_SER = BatchedSerializer(CPickleSerializer(), 1)
 
 # Scale-adaptive blob partitioning (r13 optimization, guide §2.2 "fewer,
 # larger partitions"): an iteration pass's per-task numpy work on a
@@ -152,19 +135,6 @@ def adaptive_blob_partitions(spark, n: int, current: int) -> int | None:
         return None
     return p if p < current else None
 
-def _post_cleanup_gc(sc) -> None:
-    """Nudge the JVM after dropping a multi-GB blob cache.  A solve's
-    caches die at cleanup; without a collection hint the dead byte[]
-    blocks linger in the old generation and the NEXT kernel's encode job
-    pays for them in GC pauses (measured: 2nd pack in a session 12 s →
-    90+ s without this).  Once per solve teardown — never in the
-    per-iteration path."""
-    try:
-        sc._jvm.System.gc()
-    except Exception:  # pragma: no cover - JVM gateway already closed
-        pass
-
-
 def ipc_ser(rb: pa.RecordBatch) -> bytes:
     sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, rb.schema) as w:
@@ -174,164 +144,6 @@ def ipc_ser(rb: pa.RecordBatch) -> bytes:
 
 def ipc_deser(b: bytes) -> pa.RecordBatch:
     return pa.ipc.open_stream(pa.BufferReader(b)).read_next_batch()
-
-
-def blob_iter(blobs) -> Iterator[pa.RecordBatch]:
-    for b in blobs:
-        yield ipc_deser(bytes(b))
-
-
-def blob_payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a record-batch kernel pass into a blob-RDD ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(blobs):
-        for rb in pass_fn(blob_iter(blobs)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def blob_transform_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a batch→batch kernel pass (commit/render) into a blob→blob
-    ``mapPartitions`` function."""
-
-    def fn(blobs):
-        for rb in pass_fn(blob_iter(blobs)):
-            yield ipc_ser(rb)
-
-    return fn
-
-
-def merge_payload(a, b):
-    sums = np.frombuffer(a[0], dtype=np.float64) + np.frombuffer(
-        b[0], dtype=np.float64
-    )
-    mins = np.minimum(
-        np.frombuffer(a[1], dtype=np.float64),
-        np.frombuffer(b[1], dtype=np.float64),
-    )
-    return (sums.tobytes(), mins.tobytes())
-
-
-def reduce_blob_payload(pairs_rdd, big: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Reduce a kernel pass's per-partition ``(sums, mins)`` payload
-    elements — the RDD counterpart of :func:`collect_payload`, same
-    ``big`` gate: large payloads (dense K² Gram) merge executor-side via
-    ``treeReduce`` so the driver receives O(tree-fanout) blobs."""
-    if big:
-        sums_b, mins_b = pairs_rdd.treeReduce(merge_payload)
-        return (
-            np.frombuffer(sums_b, dtype=np.float64).copy(),
-            np.frombuffer(mins_b, dtype=np.float64).copy(),
-        )
-    rows = pairs_rdd.collect()
-    sums = np.sum([np.frombuffer(s, dtype=np.float64) for s, _ in rows], axis=0)
-    mins = np.min([np.frombuffer(m, dtype=np.float64) for _, m in rows], axis=0)
-    return sums, mins
-
-
-def _payload_unpack(batches: Iterator[pa.RecordBatch]):
-    for rb in batches:
-        for blob in rb.column(0).to_pylist():
-            yield ipc_deser(blob)
-
-
-def blobs_to_weights_df(spark, blob_rdd, render_fn) -> DataFrame:
-    """(row_id, new_weight) DataFrame from a blob RDD — Arrow end to end:
-    ``render_fn`` maps each packed batch to a (row_id, new_weight) batch;
-    the per-batch IPC payloads cross the RDD→DataFrame seam as single
-    binary rows, then ``mapInArrow`` explodes them JVM-side."""
-
-    def to_payload(blobs):
-        for rb in render_fn(blob_iter(blobs)):
-            yield (ipc_ser(rb),)
-
-    payload = blob_rdd.mapPartitions(to_payload, preservesPartitioning=True)
-    return spark.createDataFrame(payload, "payload binary").mapInArrow(
-        _payload_unpack, "row_id bigint, new_weight double"
-    )
-
-
-# -- split-state zip helpers (stateful kernels: elastic, penalty) ----------
-def zip_combined_iter(pair_iter) -> Iterator[pa.RecordBatch]:
-    """(base_blob, state_blob) zip pairs → one combined RecordBatch,
-    zero-copy (same buffers); column names come from the blob schemas."""
-    for bb, sb in pair_iter:
-        b = ipc_deser(bytes(bb))
-        s = ipc_deser(bytes(sb))
-        fields = [
-            *(b.schema.field(i) for i in range(b.num_columns)),
-            *(s.schema.field(i) for i in range(s.num_columns)),
-        ]
-        # base metadata must survive: it carries the dense-idx elision
-        # stamp _flatten_rb needs to resynthesize the idx column
-        yield pa.RecordBatch.from_arrays(
-            list(b.columns) + list(s.columns),
-            schema=pa.schema(fields, metadata=b.schema.metadata),
-        )
-
-
-def zip_payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a combined-batch kernel pass into a zip-pair ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(pair_iter):
-        for rb in pass_fn(zip_combined_iter(pair_iter)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def zip_state_commit_adapter(pass_fn: Callable, state_names) -> Callable:
-    """Run a batch→batch commit pass on zipped pairs and serialize ONLY the
-    mutable state columns of its output — the immutable base columns are
-    never rewritten."""
-    names = list(state_names)
-
-    def fn(pair_iter):
-        for rb in pass_fn(zip_combined_iter(pair_iter)):
-            yield ipc_ser(
-                pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.get_field_index(c)) for c in names],
-                    names,
-                )
-            )
-
-    return fn
-
-
-def zip_weights_df(spark, base_rdd, state_rdd, render_fn) -> DataFrame:
-    """(row_id, new_weight) DataFrame from a split-state zip — the pair
-    counterpart of :func:`blobs_to_weights_df`."""
-
-    def to_payload(pair_iter):
-        for rb in render_fn(zip_combined_iter(pair_iter)):
-            yield (ipc_ser(rb),)
-
-    payload = base_rdd.zip(state_rdd).mapPartitions(
-        to_payload, preservesPartitioning=True
-    )
-    return spark.createDataFrame(payload, "payload binary").mapInArrow(
-        _payload_unpack, "row_id bigint, new_weight double"
-    )
-
-
-def _flatten(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-batch CSR pieces: flat indices, flat values, row lengths."""
-    idx_list = pdf["idx"].to_list()
-    lens = np.fromiter((len(a) for a in idx_list), dtype=np.int64, count=len(idx_list))
-    if lens.sum() == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float64), lens
-    flat_idx = np.concatenate(idx_list).astype(np.int64, copy=False)
-    flat_val = np.concatenate(pdf["val"].to_list()).astype(np.float64, copy=False)
-    return flat_idx, flat_val, lens
 
 
 def _flatten_rb(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -375,16 +187,6 @@ def _rb_q(rb: pa.RecordBatch, sum_w0: float) -> np.ndarray:
     """Start weights q = w0/Σw0 — recomputed from the blob's w0 column
     (one divide per row; blobs stopped carrying a q column in r8)."""
     return _rb_col(rb, "w0") / sum_w0
-
-
-def _rb_with(rb: pa.RecordBatch, **cols: np.ndarray) -> pa.RecordBatch:
-    """Copy of the batch with the named double columns replaced."""
-    arrays = [rb.column(i) for i in range(rb.num_columns)]
-    for name, arr in cols.items():
-        arrays[rb.schema.get_field_index(name)] = pa.array(
-            np.asarray(arr, dtype=np.float64), type=pa.float64()
-        )
-    return pa.RecordBatch.from_arrays(arrays, schema=rb.schema)
 
 
 def _segsum(prod: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -506,48 +308,6 @@ def reduce_big(
     )
 
 
-def collect_payload(out: DataFrame, big: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Reduce a kernel pass's per-partition ``(sums, mins)`` payload rows.
-
-    Small payloads (step passes, modest K): plain ``collect`` — one job,
-    no extra stage, driver sums ~#partitions tiny blobs.  Large payloads
-    (the dense K² Gram at K ≳ 1000): the driver would receive
-    ``#partitions × payload`` bytes — 50 partitions × 32 MB at K=2000
-    already exceeds ``spark.driver.maxResultSize``, and 1000 executors
-    would ship 32 GB — so the merge happens executor-side with
-    ``treeReduce`` and the driver receives O(tree-fanout) blobs.  This
-    wall was FOUND, not hypothesized: reproducing the reference's largest
-    in-repo workload (dense N=100k × K=2000 collinear,
-    examples/simple_examples.py:13-31) killed the plain collect.
-
-    The tree path costs one extra shuffle level per reduce, so it is
-    gated on payload size: exactly the regime where each pass already
-    costs seconds and the extra stage is noise.
-    """
-    if not big:
-        rows = out.collect()
-        sums = np.sum(
-            [np.frombuffer(r.sums, dtype=np.float64) for r in rows], axis=0
-        )
-        mins = np.min(
-            [np.frombuffer(r.mins, dtype=np.float64) for r in rows], axis=0
-        )
-        return sums, mins
-
-    def dec(r):
-        return (
-            np.frombuffer(r.sums, dtype=np.float64),
-            np.frombuffer(r.mins, dtype=np.float64),
-        )
-
-    def merge(a, b):
-        return a[0] + b[0], np.minimum(a[1], b[1])
-
-    depth = 2 if out.rdd.getNumPartitions() <= 64 else 3
-    sums, mins = out.rdd.map(dec).treeReduce(merge, depth)
-    return sums, mins
-
-
 def gram_from_sums(flat: np.ndarray, k: int, block_structure):
     """Driver-side decode of a packed gram buffer: BlockGram or dense."""
     if block_structure is not None:
@@ -611,13 +371,10 @@ def pack_rows(
     already computed them at build time."""
     if known_sums is not None:
         sum_w0, n = float(known_sums[0]), int(known_sums[1])
-    elif prepacked is not None:
-        sums = prepacked.agg(
+    else:
+        sums = (prepacked if prepacked is not None else w0).agg(
             F.sum("w0").alias("s"), F.count(F.lit(1)).alias("n")
         ).first()
-        sum_w0, n = float(sums["s"]), int(sums["n"])
-    else:
-        sums = w0.agg(F.sum("w0").alias("s"), F.count(F.lit(1)).alias("n")).first()
         sum_w0, n = float(sums["s"]), int(sums["n"])
     if prepacked is not None:
         return prepacked.select("row_id", "w0", "idx", "val"), sum_w0, n
@@ -643,12 +400,6 @@ def pack_rows(
         )
     )
     return df, sum_w0, n
-
-
-def _pack(sums: list[float | np.ndarray], mins: list[float]) -> pd.DataFrame:
-    sbuf = np.concatenate([np.atleast_1d(np.asarray(x, dtype=np.float64)).ravel() for x in sums])
-    mbuf = np.asarray(mins, dtype=np.float64)
-    return pd.DataFrame({"sums": [sbuf.tobytes()], "mins": [mbuf.tobytes()]})
 
 
 def _pack_rb(sums: list[float | np.ndarray], mins: list[float]) -> pa.RecordBatch:
@@ -689,49 +440,16 @@ def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
     return w
 
 
-def count_bad_entries(
-    flat_val: np.ndarray, lens: np.ndarray, w0: np.ndarray
-) -> tuple[float, float]:
-    """V1 validation counts for one packed batch: rows with any
-    non-finite X value, and weights that are non-finite or ≤ 0 (nulls
-    arrive as NaN through the Arrow conversion, so one finiteness check
-    covers null/NaN/±Inf — the same predicate set as the eager
-    DataFrame validation in solvers/api.py)."""
-    bad_x = 0.0
-    if flat_val.size:
-        bad_x = float(
-            np.count_nonzero(
-                _segsum((~np.isfinite(flat_val)).astype(np.float64), lens)
-            )
-        )
-    with np.errstate(invalid="ignore"):
-        bad_w = float(np.count_nonzero(~np.isfinite(w0) | (w0 <= 0)))
-    return bad_x, bad_w
-
-
-def raise_if_bad(bad_x: float, bad_w: float) -> None:
-    """Same error contract as the eager V1 aggregate (solvers/api.py)."""
-    if bad_x or bad_w:
-        raise ValueError(
-            f"Inputs include invalid values ({int(bad_x)} bad X "
-            f"rows, {int(bad_w)} bad weights)"
-        )
-
-
 def _stats_pass(
     k: int,
     lam: np.ndarray,
     blocks=None,
     wprog=None,
     sum_w0: float = 1.0,
-    validate: bool = False,
 ) -> Callable:
     """``blocks``: None → dense K×K Gram scratch; else the
     (block_of, local, sizes, flat_offsets, total_flat) arrays → flat Σk_b²
-    per-block accumulation (the huge-K path).  ``validate``: append the V1
-    bad-entry counts (bad X rows, bad weights) to the payload tail — the
-    deferred-validation pass that rides the cache-materializing first
-    stats scan instead of running its own aggregate (r13 optimization)."""
+    per-block accumulation (the huge-K path)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         f_val = 0.0
@@ -741,16 +459,11 @@ def _stats_pass(
         xt_wcd = np.zeros(k)
         gram, gram_add = make_gram_accum(k, blocks)
         min_w = np.inf
-        bad_x = bad_w = 0.0
         for rb in batches:
             if not rb.num_rows:
                 continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
             w0 = _rb_col(rb, "w0")
-            if validate:
-                bx, bw = count_bad_entries(flat_val, lens, w0)
-                bad_x += bx
-                bad_w += bw
             q = _rb_q(rb, sum_w0)
             w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
             r = w / q
@@ -767,10 +480,7 @@ def _stats_pass(
             gram_add(flat_idx, flat_val, lens, w)
             if len(w):
                 min_w = min(min_w, float(w.min()))
-        sums = [f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram]
-        if validate:
-            sums += [bad_x, bad_w]
-        yield _pack_rb(sums, [min_w])
+        yield _pack_rb([f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram], [min_w])
 
     return fn
 
@@ -926,24 +636,17 @@ class SparkKernel:
     Iteration job fusion: ``commit`` only DECLARES the state transition
     (lazy blob rewrite + persist); the very next ``stats`` job both
     materializes the new state into the cache and computes its reductions
-    in a single scan — 2 jobs per iteration instead of 3.  Lineage is
-    truncated with an RDD ``localCheckpoint`` every few commits so a cache
-    eviction can never cascade a long recompute chain."""
-
-    _CKPT_EVERY = 8  # commits between lineage truncations
+    in a single scan — 2 jobs per iteration instead of 3.  The blob cache
+    and its lifecycle live in a :class:`BlobStore` without split state."""
 
     def __init__(
-        self, rdd, spark, k: int, sum_w0: float, n: int, block_structure=None
+        self, store, k: int, sum_w0: float, n: int, block_structure=None
     ) -> None:
-        self._rdd = rdd
-        self._spark = spark
+        self._store = store
         self.k = k
         self.sum_w0 = sum_w0
         self.n = n
         self.block_structure = block_structure
-        self._prev = None
-        self._rollback_src = None
-        self._commits_since_ckpt = 0
         # Analytic weight state: when set, the TRUE iterate is the replay
         # of this short op-program against the immutable base (see
         # ``_w_state``) and the cached wstar column may be stale — commits
@@ -951,11 +654,6 @@ class SparkKernel:
         self._wprog: list | None = None
         self._prev_wprog: list | None = None
         self._last_commit: str | None = None
-        # deferred V1 validation: armed by the API layer, consumed by the
-        # first stats pass (which also materializes the blob cache) — the
-        # bad-entry counts ride the payload tail, so validation costs zero
-        # extra jobs (r13 optimization)
-        self._validate_first_stats = False
         # Speculative α=1 primal stats (r13 optimization): the step pass
         # fuses the NEXT iteration's stats reductions for the α=1 primal
         # candidate; ``commit`` marks the stash live when the driver indeed
@@ -969,7 +667,7 @@ class SparkKernel:
         self._spec_misses = 0
         self._spec_conf = (
             str(
-                spark.conf.get("spark.ebw.speculativeStats", "true")
+                store.spark.conf.get("spark.ebw.speculativeStats", "true")
             ).lower()
             != "false"
         )
@@ -996,57 +694,25 @@ class SparkKernel:
         is elided per batch (:func:`maybe_elide_idx`), and the persist is
         LAZY: the first stats reduce materializes encode+cache+reductions
         in one job instead of a separate pack scan."""
-        df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
-        has_guess = ratio_guess is not None
-        if has_guess:
-            df = df.join(
-                ratio_guess.select("row_id", "ratio"), "row_id", "left"
-            ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-        def to_blob(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                arrays = [
-                    rb.column(rb.schema.get_field_index(c))
-                    for c in ("row_id", "w0", "idx", "val")
-                ]
-                names = list(PACKED_NAMES)
-                if has_guess:
-                    q = _rb_col(rb, "w0") / sum_w0
-                    arrays.append(
-                        pa.array(
-                            np.ascontiguousarray(q * _rb_col(rb, "ratio")),
-                            type=pa.float64(),
-                        )
-                    )
-                    names.append("wstar")
-                out = maybe_elide_idx(
-                    pa.RecordBatch.from_arrays(arrays, names), k
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([ipc_ser(out)], type=pa.binary())], ["payload"]
-                )
-
-        cols = ["row_id", "w0", "idx", "val", *(["ratio"] if has_guess else [])]
-        rdd = (
-            df.select(*cols)
-            .mapInArrow(to_blob, "payload binary")
-            .rdd.map(lambda r: bytes(r[0]))
-        )
-        p = adaptive_blob_partitions(df.sparkSession, n, rdd.getNumPartitions())
-        if p is not None:
-            # small problem: encode at full parallelism, then move the
-            # finished blobs once so every iteration pass runs p tasks
-            # instead of one per input split (see adaptive_blob_partitions)
-            rdd = rdd.coalesce(p, shuffle=True)
-        rdd = rdd._reserialize(BLOB_SER).persist(StorageLevel.MEMORY_AND_DISK)
+        # imported here: blobstore builds on this module's blob format
+        from entropy_balance_weighting_spark.kernels.blobstore import BlobStore
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
+        df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
+        store = BlobStore.build(
+            df,
+            k,
+            n,
+            ratio_guess=ratio_guess,
+            # warm start: the materialized state q·ratio rides the base
+            wstar=None
+            if ratio_guess is None
+            else lambda rb: _rb_col(rb, "w0") / sum_w0 * _rb_col(rb, "ratio"),
+        )
         bs = (
             BlockStructure.from_groups(moment_groups) if moment_groups else None
         )
-        kern = cls(rdd, df.sparkSession, k, sum_w0, n, block_structure=bs)
+        kern = cls(store, k, sum_w0, n, block_structure=bs)
         if ratio_guess is None:
             # wstar = q = q·exp(X·0): the start point is analytic
             kern._wprog = [("exp", np.zeros(k))]
@@ -1057,7 +723,7 @@ class SparkKernel:
         needs this — the first stats reduce materializes encode + cache +
         reductions in ONE job — but benches/tests that want the pack cost
         on its own line call it explicitly."""
-        self._rdd.count()
+        self._store.base.count()
 
     def init_state(self, ratio_guess=None) -> None:
         if ratio_guess is not None:
@@ -1067,29 +733,33 @@ class SparkKernel:
 
     # -- passes ------------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        pairs = self._rdd.mapPartitions(
-            blob_payload_adapter(fn), preservesPartitioning=True
-        )
-        return reduce_blob_payload(pairs, big)
+        return self._store.reduce(fn, big)
 
     @property
     def _gram_big(self) -> bool:
-        return reduce_big(
-            self.k, self.block_structure, self._rdd.getNumPartitions()
-        )
+        return reduce_big(self.k, self.block_structure, self._store.num_partitions)
 
     def defer_validation(self) -> None:
-        """Arm the fused V1 check: the next ``stats`` pass counts bad X
-        rows / bad weights in its payload and raises the same ValueError
-        the eager aggregate would — one fewer full scan per solve."""
-        self._validate_first_stats = True
+        """Arm the fused V1 check on the first pass (see BlobStore)."""
+        self._store.defer_validation()
+
+    def _iter_stats(self, sums: np.ndarray, min_w: float) -> IterStats:
+        """Decode a stats payload (``_stats_pass`` layout, also the
+        speculative tail of ``_step_pass``)."""
+        k = self.k
+        return IterStats(
+            f_val=float(sums[0]),
+            xt_w=sums[3 : 3 + k],
+            cd_sq=float(sums[1]),
+            xt_wcd=sums[3 + k : 3 + 2 * k],
+            gram=gram_from_sums(sums[3 + 2 * k :], k, self.block_structure),
+            min_w=float(min_w),
+            has_nan=sums[2] > 0,
+        )
 
     def stats(self, lam: np.ndarray) -> IterStats:
-        k = self.k
-        validate = self._validate_first_stats
         if (
-            not validate
-            and self._spec is not None
+            self._spec is not None
             and self._spec["committed"]
             and np.array_equal(lam, self._spec["lam_new"])
         ):
@@ -1102,40 +772,15 @@ class SparkKernel:
         self._spec = None
         sums, mins = self._reduce(
             _stats_pass(
-                k,
+                self.k,
                 lam,
                 blocks_tuple(self.block_structure),
                 self._wprog,
                 self.sum_w0,
-                validate=validate,
             ),
             big=self._gram_big,
         )
-        if validate:
-            self._validate_first_stats = False
-            raise_if_bad(sums[-2], sums[-1])
-            sums = sums[:-2]
-        # the reduce materialized any pending lazy commit into its cache —
-        # the superseded state's CACHE can go; the RDD handle is kept so a
-        # zero-weight guard can roll back via lineage recompute (bounded by
-        # _CKPT_EVERY passes since the last checkpoint, failure path only)
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._rollback_src = self._prev
-            self._prev = None
-        f_val, cd_sq, nan_ct = sums[0], sums[1], sums[2]
-        xt_w = sums[3 : 3 + k]
-        xt_wcd = sums[3 + k : 3 + 2 * k]
-        gram = gram_from_sums(sums[3 + 2 * k :], k, self.block_structure)
-        return IterStats(
-            f_val=float(f_val),
-            xt_w=xt_w,
-            cd_sq=float(cd_sq),
-            xt_wcd=xt_wcd,
-            gram=gram,
-            min_w=float(mins[0]),
-            has_nan=nan_ct > 0,
-        )
+        return self._iter_stats(sums, mins[0])
 
     def step_stats(self, lam: np.ndarray, dlam: np.ndarray) -> StepStats:
         k = self.k
@@ -1158,23 +803,12 @@ class SparkKernel:
         )
         self._spec = None
         if speculate:
-            off = 2 + 2 * k
             self._spec = {
                 "lam": np.asarray(lam, dtype=np.float64).copy(),
                 "dlam": np.asarray(dlam, dtype=np.float64).copy(),
                 "lam_new": lam_new,
                 "committed": False,
-                "stats": IterStats(
-                    f_val=float(sums[off]),
-                    xt_w=sums[off + 3 : off + 3 + k],
-                    cd_sq=float(sums[off + 1]),
-                    xt_wcd=sums[off + 3 + k : off + 3 + 2 * k],
-                    gram=gram_from_sums(
-                        sums[off + 3 + 2 * k :], k, self.block_structure
-                    ),
-                    min_w=float(mins[2]),
-                    has_nan=sums[off + 2] > 0,
-                ),
+                "stats": self._iter_stats(sums[2 + 2 * k :], mins[2]),
             }
         return StepStats(
             alpha_raw=float(mins[0]),
@@ -1259,24 +893,8 @@ class SparkKernel:
         # penalty (the prediction itself was not wrong)
         self._spec = None
         self._last_commit = "materialized"
-        new_rdd = (
-            self._rdd.mapPartitions(
-                blob_transform_adapter(
-                    _commit_pass(
-                        choice, lam, dlam, alpha, self._wprog, self.sum_w0
-                    )
-                ),
-                preservesPartitioning=True,
-            )
-            ._reserialize(BLOB_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_rdd.localCheckpoint()
-            self._commits_since_ckpt = 0
-        self._prev = self._rdd
-        self._rdd = new_rdd
+        pass_fn = _commit_pass(choice, lam, dlam, alpha, self._wprog, self.sum_w0)
+        self._store.commit(lambda batches: map(ipc_ser, pass_fn(batches)))
         self._wprog = None
 
     def rollback(self) -> None:
@@ -1293,16 +911,9 @@ class SparkKernel:
             self._wprog = self._prev_wprog
             self._last_commit = None
             return
-        src = self._prev if self._prev is not None else self._rollback_src
-        if src is None:
-            raise RuntimeError("no committed step to roll back")
-        self._rdd.unpersist()
-        self._rdd = src.persist(StorageLevel.MEMORY_AND_DISK)
-        self._prev = None
-        self._rollback_src = None
+        self._store.rollback()
         self._wprog = self._prev_wprog
         self._last_commit = None
-        self._commits_since_ckpt = max(0, self._commits_since_ckpt - 1)
 
     def new_weights(self) -> DataFrame:
         sum_w0 = self.sum_w0
@@ -1321,11 +932,7 @@ class SparkKernel:
                     ["row_id", "new_weight"],
                 )
 
-        return blobs_to_weights_df(self._spark, self._rdd, render)
+        return self._store.weights_df(render)
 
     def cleanup(self) -> None:
-        self._rdd.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
-        _post_cleanup_gc(self._spark.sparkContext)
+        self._store.cleanup()

@@ -108,66 +108,6 @@ def _validate_local_inputs(x: np.ndarray, w0: np.ndarray, m: np.ndarray) -> None
         )
 
 
-def _validate_distributed_inputs(pt: ProblemTables) -> None:
-    """V1 as ONE job.  With builder-packed arrays, a single scan of the
-    packed rows checks both X entries and weights (no explode lineage, no
-    second table); otherwise the two bad-entry counts are unioned
-    single-row aggregates inside one collect."""
-    from pyspark.sql import functions as F
-
-    inf = float("inf")
-    if pt.packed_arrays is not None:
-        bad_val = F.exists(
-            "val",
-            lambda v: v.isNull() | F.isnan(v) | v.isin(inf, -inf),
-        )
-        bad_w = (
-            F.col("w0").isNull()
-            | F.isnan("w0")
-            | F.col("w0").isin(inf, -inf)
-            | (F.col("w0") <= 0)
-        )
-        row = pt.packed_arrays.agg(
-            F.count(F.when(bad_val, 1)).alias("bad_x"),
-            F.count(F.when(bad_w, 1)).alias("bad_w"),
-        ).first()
-        if row["bad_x"] or row["bad_w"]:
-            raise ValueError(
-                f"Inputs include invalid values ({row['bad_x']} bad X "
-                f"rows, {row['bad_w']} bad weights)"
-            )
-        return
-    bad_x_agg = pt.x_long.agg(
-        F.count(
-            F.when(
-                F.col("value").isNull()  # NULL ≙ NaN after Arrow transfer
-                | F.isnan("value")
-                | F.col("value").isin(inf, -inf),
-                1,
-            )
-        ).alias("bad"),
-        F.lit("x").alias("side"),
-    )
-    bad_w_agg = pt.w0.agg(
-        F.count(
-            F.when(
-                F.col("w0").isNull()
-                | F.isnan("w0")
-                | F.col("w0").isin(inf, -inf)
-                | (F.col("w0") <= 0),
-                1,
-            )
-        ).alias("bad"),
-        F.lit("w").alias("side"),
-    )
-    counts = {r["side"]: r["bad"] for r in bad_x_agg.unionByName(bad_w_agg).collect()}
-    if counts.get("x") or counts.get("w"):
-        raise ValueError(
-            f"Inputs include invalid values ({counts.get('x', 0)} bad X "
-            f"entries, {counts.get('w', 0)} bad weights)"
-        )
-
-
 def _moments_vector(pt: ProblemTables, m: Any) -> np.ndarray:
     """Targets as an id-ordered K-vector; accepts ndarray or DataFrame."""
     if isinstance(m, np.ndarray):
@@ -420,9 +360,7 @@ def _resolve_problem(x_sample, weights0, mean_population_moments, opts):
         # kernel's first pass (r13 optimization, guide §1.2): the pass that
         # materializes the blob cache counts bad X rows / bad weights in
         # its payload and raises the same ValueError — one fewer full scan
-        # per solve than a separate validation aggregate.  Kernels that do
-        # not support the fused check run the eager aggregate instead
-        # (see the factories below).
+        # per solve than a separate validation aggregate.
         return "spark", (pt, m, original, validate)
 
     raise TypeError(
@@ -485,9 +423,6 @@ def _build_penalty_kernel(x_sample, weights0, mean_population_moments, opts, bou
         return wrap(kernel), m, original
 
     pt, m, original, validate = payload
-    if validate:
-        # the penalty kernel has no fused first-pass check — eager V1 scan
-        _validate_distributed_inputs(pt)
     from entropy_balance_weighting_spark.kernels.penalty_spark import (
         PenaltySparkKernel,
     )
@@ -504,6 +439,8 @@ def _build_penalty_kernel(x_sample, weights0, mean_population_moments, opts, bou
         ),
         prepacked=pt.packed_arrays,
     )
+    if validate:
+        kernel.defer_validation()
     return kernel, m, original
 
 

@@ -18,8 +18,8 @@ from entropy_balance_weighting_spark.kernels.spark import (
     ipc_deser,
     ipc_ser,
     maybe_elide_idx,
-    zip_combined_iter,
 )
+from entropy_balance_weighting_spark.kernels.blobstore import zip_combined_iter
 
 
 def _packed_rb(idx_rows, val_rows, w0=None):

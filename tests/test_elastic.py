@@ -373,6 +373,7 @@ def test_wire32_payload_roundtrip_and_merge():
     merge matches the float64 merge to float32 tolerance."""
     import numpy as np
 
+    from entropy_balance_weighting_spark.kernels import blobstore
     from entropy_balance_weighting_spark.kernels import elastic_spark as es
 
     rng = np.random.default_rng(11)
@@ -400,7 +401,7 @@ def test_wire32_payload_roundtrip_and_merge():
             rb.column(1).to_pylist()[0],
         )
 
-    s64, m64 = es._merge_payload(pair(a, False), pair(b, False))
+    s64, m64 = blobstore.merge_payload(pair(a, False), pair(b, False))
     s32, m32 = es._merge_payload_mixed(pair(a, True), pair(b, True))
     full64 = np.frombuffer(s64, dtype=np.float64)
     full32 = es._decode_sums(s32, True)

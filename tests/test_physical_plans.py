@@ -140,14 +140,14 @@ def test_solver_iteration_pass_has_no_shuffle(spark):
         spark.createDataFrame(pdf),
         MomentSpec(weight_col="w", numeric=("x0",), row_key=("rid",)),
     )
-    from entropy_balance_weighting_spark.kernels.spark import (
+    from entropy_balance_weighting_spark.kernels.blobstore import (
         blob_payload_adapter,
     )
 
     kern = SparkKernel.from_problem(pt.x_long, pt.w0, pt.k)
     # iteration passes are narrow mapPartitions over the cached blob RDD:
     # the lineage must contain no shuffle stage
-    pass_rdd = kern._rdd.mapPartitions(
+    pass_rdd = kern._store.base.mapPartitions(
         blob_payload_adapter(
             _stats_pass(
                 kern.k, np.zeros(kern.k), wprog=kern._wprog, sum_w0=kern.sum_w0
